@@ -102,14 +102,10 @@ object Bm25Store {
   def runBm25Stream(spark: SparkSession, uploadDir: String,
                     terms: Seq[String], storePath: String,
                     checkpointDir: String, schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val stores =
-      Seq(statsStore(storePath), dlStore(storePath), tfStore(storePath))
-    stores.foreach(_.recover(spark))
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendBm25Batch(spark, batch, terms, storePath, id)
-        stores.foreach(_.maybeCompact(spark, id, compactEvery))
+                    compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(statsStore(storePath), dlStore(storePath), tfStore(storePath)),
+      compactEvery) { (batch, id) =>
+      appendBm25Batch(spark, batch, terms, storePath, id)
     }
-  }
 }

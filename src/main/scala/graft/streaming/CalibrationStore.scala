@@ -75,18 +75,12 @@ object CalibrationStore {
                            storePath: String, checkpointDir: String,
                            schema: StructType,
                            score: DataFrame => DataFrame,
-                           compactEvery: Int = 0): StreamingQuery = {
-    val ss = scoreStore(storePath)
-    val rs = raterStore(storePath)
-    ss.recover(spark)
-    rs.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
+                           compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(scoreStore(storePath), raterStore(storePath)), compactEvery) {
       (batch, id) =>
         appendScoredBatch(spark, score(batch), storePath, id)
         appendVerdictBatch(spark,
           RaterAgreement.raterVerdicts(batch), storePath, id)
-        ss.maybeCompact(spark, id, compactEvery)
-        rs.maybeCompact(spark, id, compactEvery)
     }
-  }
 }

@@ -67,7 +67,7 @@ object CdcStore {
   def runCdcStream(spark: SparkSession, uploadDir: String,
                    storePath: String, checkpointDir: String,
                    schema: StructType): StreamingQuery =
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema) {
       (batch, _) => mergeCdcBatch(spark, batch, storePath)
     }
 

@@ -80,7 +80,7 @@ object CohortStore {
   def runCohortStream(spark: SparkSession, uploadDir: String,
                       rootPath: String, checkpointDir: String,
                       schema: StructType): StreamingQuery =
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema) {
       (batch, _) => mergeCohortBatch(spark, batch, rootPath)
     }
 

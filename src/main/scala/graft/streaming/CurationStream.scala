@@ -2,10 +2,11 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 import graft.ext.TextOps
 import graft.merge.Merge
+import MonoidStore.runStream
 
 /** Streaming ingest for the curation family — documents arrive as files
   * (the at-least-once reality of every corpus drop), get gated and
@@ -265,30 +266,11 @@ object CurationStream {
     * map-only), each micro-batch appends to the packed store via
     * [[appendPackedBatch]]. Composable beside [[runCurationStream]] on
     * the same upload dir (separate checkpoint). */
-  /** The ONE definition of the file-ingest scaffold every stream here
-    * shares (schema'd parquet source, 1 file/trigger, AvailableNow,
-    * checkpointed foreachBatch): `transform` shapes the streaming frame
-    * (identity for raw-docs streams), `body` handles each micro-batch.
-    * A change to the ingestion contract lands once, not five times. */
-  private[graft] def runFileStream(spark: SparkSession, uploadDir: String,
-                            checkpointDir: String, schema: StructType,
-                            transform: DataFrame => DataFrame = identity)(
-                            body: (DataFrame, Long) => Unit): StreamingQuery =
-    transform(spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(uploadDir))
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch(body)
-      .start()
-
   def runPackingStream(spark: SparkSession, uploadDir: String,
                        packedPath: String, checkpointDir: String,
                        schema: StructType): StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema,
-      docs => TextOps.chunkTokens(TextOps.gateAndScrub(docs),
+    runStream(spark, uploadDir, checkpointDir, schema,
+      transform = docs => TextOps.chunkTokens(TextOps.gateAndScrub(docs),
         org.apache.spark.sql.functions.col("scrubbed"))) {
       (batch, id) => appendPackedBatch(spark, batch, packedPath, id)
     }
@@ -515,8 +497,8 @@ object CurationStream {
                        schema: StructType,
                        partitionedStore: Boolean = false,
                        clustersPath: Option[String] = None): StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema,
-      TextOps.gateAndScrub) { (batch, _) =>
+    runStream(spark, uploadDir, checkpointDir, schema,
+      transform = TextOps.gateAndScrub) { (batch, _) =>
       val (ck, release) = graft.util.Checkpoints.checkpointTracked(batch)
       try {
         if (partitionedStore)
@@ -558,7 +540,7 @@ object CurationStream {
                        clfWeights: Option[Map[Long, Long]] = None,
                        dsir: Option[graft.ext.CorpusOps.DsirModel] = None)
       : StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema) { (batch, id) =>
+    runStream(spark, uploadDir, checkpointDir, schema) { (batch, id) =>
       val clf = clfWeights
         .fold(graft.ext.CorpusOps.classify(batch))(w =>
           graft.ext.CorpusOps.classifyWith(batch, w))
@@ -595,7 +577,7 @@ object CurationStream {
   def runLineStatsStream(spark: SparkSession, uploadDir: String,
                          statsPath: String, checkpointDir: String,
                          schema: StructType): StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema) { (batch, _) =>
+    runStream(spark, uploadDir, checkpointDir, schema) { (batch, _) =>
       mergeLineStatsBatch(spark, batch, statsPath)
     }
 
@@ -664,7 +646,7 @@ object CurationStream {
                            schema: StructType,
                            k: Int = graft.ext.TextOps.substrK)
       : StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema) { (batch, _) =>
+    runStream(spark, uploadDir, checkpointDir, schema) { (batch, _) =>
       mergeWindowStatsBatch(spark, batch, statsPath, k)
     }
 
@@ -753,7 +735,7 @@ object CurationStream {
                          schema: StructType,
                          clfWeights: Option[Map[Long, Long]] = None)
       : StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema) { (batch, id) =>
+    runStream(spark, uploadDir, checkpointDir, schema) { (batch, id) =>
       appendScoreHistBatch(spark, batch, histPath, id, clfWeights)
     }
 
@@ -811,8 +793,8 @@ object CurationStream {
                         partitionedStore: Boolean = false,
                         noveltyFilter: Option[Array[Byte]] = None)
       : StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema,
-      docs => TextOps.gateAndScrub(noveltyFilter.fold(docs)(bf =>
+    runStream(spark, uploadDir, checkpointDir, schema,
+      transform = docs => TextOps.gateAndScrub(noveltyFilter.fold(docs)(bf =>
         docs.filter(!graft.operators.BloomProbe.mightContain(bf,
           md5(col("text").cast("binary"))))))) { (batch, _) =>
       if (partitionedStore)
@@ -853,7 +835,7 @@ object CurationStream {
                        novelPath: String, bitsPath: String,
                        checkpointDir: String,
                        schema: StructType): StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema) { (batch, id) =>
+    runStream(spark, uploadDir, checkpointDir, schema) { (batch, id) =>
       appendNovelBatch(spark, batch, novelPath, bitsPath, id)
     }
 
@@ -1086,7 +1068,7 @@ object CurationStream {
                         schema: StructType,
                         centroids: Array[Array[Double]],
                         model: graft.ext.Similarity.PqModel): StreamingQuery =
-    runFileStream(spark, uploadDir, checkpointDir, schema) { (batch, _) =>
+    runStream(spark, uploadDir, checkpointDir, schema) { (batch, _) =>
       appendAnnBatch(spark, batch, annPath, centroids, model)
     }
 

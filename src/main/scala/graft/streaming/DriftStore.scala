@@ -64,13 +64,9 @@ object DriftStore {
   def runDriftStream(spark: SparkSession, uploadDir: String,
                      storePath: String, checkpointDir: String,
                      schema: StructType,
-                     compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendDriftBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                     compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendDriftBatch(spark, batch, storePath, id)
     }
-  }
 }

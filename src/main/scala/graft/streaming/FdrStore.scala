@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 import graft.operators.FdrBh
 
 /** Incrementally-maintained MULTIPLE-TESTING state — the streaming
@@ -41,17 +39,4 @@ object FdrStore {
     * events. */
   def fdrView(spark: SparkSession, storePath: String): DataFrame =
     FdrBh.fdrFromCounts(store(storePath).merged(spark))
-
-  def runFdrStream(spark: SparkSession, uploadDir: String,
-                   storePath: String, checkpointDir: String,
-                   schema: StructType,
-                   compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendEventBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
-    }
-  }
 }

@@ -267,18 +267,10 @@ object GraphStore {
   def runFactStream(spark: SparkSession, uploadDir: String,
                     storePath: String, checkpointDir: String,
                     schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val es = edgeStore(storePath); val ns = nodeStore(storePath)
-    val ss = supportStore(storePath); val os = orderStore(storePath)
-    es.recover(spark); ns.recover(spark); ss.recover(spark)
-    os.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendFactBatch(spark, batch, storePath, id)
-        es.maybeCompact(spark, id, compactEvery)
-        ns.maybeCompact(spark, id, compactEvery)
-        ss.maybeCompact(spark, id, compactEvery)
-        os.maybeCompact(spark, id, compactEvery)
+                    compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(edgeStore(storePath), nodeStore(storePath),
+        supportStore(storePath), orderStore(storePath)), compactEvery) {
+      (batch, id) => appendFactBatch(spark, batch, storePath, id)
     }
-  }
 }

@@ -64,15 +64,11 @@ object HeavyHittersStore {
   def runCounterStream(spark: SparkSession, uploadDir: String,
                        storePath: String, checkpointDir: String,
                        schema: StructType,
-                       compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendCounterBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                       compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendCounterBatch(spark, batch, storePath, id)
     }
-  }
 
   /** Exact heavy hitters of `corpus` (the absorbed documents) served
     * from the LIVE counter store: prune with the stored estimates,

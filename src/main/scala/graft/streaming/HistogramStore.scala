@@ -55,13 +55,9 @@ object HistogramStore {
   def runHistStream(spark: SparkSession, uploadDir: String,
                     valueCol: String, storePath: String,
                     checkpointDir: String, schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendHistBatch(spark, batch, valueCol, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                    compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendHistBatch(spark, batch, valueCol, storePath, id)
     }
-  }
 }

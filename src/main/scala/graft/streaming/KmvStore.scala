@@ -47,7 +47,7 @@ object KmvStore {
   def runDaySketchStream(spark: SparkSession, uploadDir: String,
                          rootPath: String, checkpointDir: String,
                          schema: StructType): StreamingQuery =
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema) {
       (batch, _) => mergeDaySketchBatch(spark, batch, rootPath)
     }
 

@@ -2,8 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
 import graft.operators.LinkPredict
 
 /** Incrementally-maintained LINK-PREDICTION CANDIDATE state — the
@@ -91,19 +89,4 @@ object LinkPredictStore {
                       topK: Int = LinkPredict.lpTopK): DataFrame =
     LinkPredict.scoreSampledAdjacency(
       sampledAdjacency(spark, storePath, sample), und, sample, topK)
-
-  /** Wire the stream of edge files (u, v columns); `compactEvery` > 0
-    * enables the cadenced fold. */
-  def runEdgeStream(spark: SparkSession, uploadDir: String,
-                    storePath: String, checkpointDir: String,
-                    schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendEdgeBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
-    }
-  }
 }

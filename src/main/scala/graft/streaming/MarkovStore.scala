@@ -222,16 +222,14 @@ object MarkovStore {
   def runMarkovStream(spark: SparkSession, uploadDir: String,
                       storePath: String, checkpointDir: String,
                       schema: StructType,
-                      compactEvery: Int = 0): StreamingQuery = {
-    val cs = countsStore(storePath)
-    val ss = segmentsStore(storePath)
-    cs.recover(spark); ss.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendMarkovBatch(spark, batch, storePath, id)
-        cs.maybeCompact(spark, id, compactEvery)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          foldSegments(spark, storePath, id - 1)
+                      compactEvery: Int = 0): StreamingQuery =
+    // segments are not compactable, so the shared cadence only
+    // recovers them; the fold below is their compaction
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(countsStore(storePath), segmentsStore(storePath)),
+      compactEvery) { (batch, id) =>
+      appendMarkovBatch(spark, batch, storePath, id)
+      if (MonoidStore.compactDue(id, compactEvery))
+        foldSegments(spark, storePath, id - 1)
     }
-  }
 }

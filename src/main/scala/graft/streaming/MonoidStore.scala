@@ -2,6 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** THE PER-BATCH-DELTA STORE, defined once — the contract that
   * [[SkewStore]], [[HistogramStore]], [[Bm25Store]], [[ProfileStore]]
@@ -21,11 +23,11 @@ import org.apache.spark.sql.functions._
   *  - COMPACTION: because merge is a fold, deltas ≤ the last
   *    COMMITTED batch id can be pre-folded into a `batch=-1` base dir
   *    ([[StoreCompaction]]'s crash-safe protocol) without changing any
-  *    view — [[maybeCompact]] is the cadence hook the foreachBatch
-  *    bodies call so a long-running stream never accumulates unbounded
-  *    tiny dirs;
-  *  - RECOVERY: [[recover]] converges an interrupted compaction; the
-  *    stream wiring calls it once at start-up.
+  *    view — [[maybeCompact]] is the cadence hook
+  *    [[MonoidStore.runStream]] applies after every batch so a
+  *    long-running stream never accumulates unbounded tiny dirs;
+  *  - RECOVERY: [[recover]] converges an interrupted compaction;
+  *    [[MonoidStore.runStream]] calls it once at start-up.
   *
   * At 100 TB the store's merged-view cost is |store| (bounded: keys,
   * buckets, counters — never corpus history), per-batch cost is the
@@ -73,13 +75,13 @@ final class MonoidStore(val path: String,
   def recover(spark: SparkSession): Unit =
     StoreCompaction.recover(spark, path)
 
-  /** The cadence hook for foreachBatch bodies: after batch `batchId`'s
-    * delta is written, fold everything up to the PREVIOUS batch
-    * (committed by the checkpoint) once per `every` batches. `every`
-    * ≤ 0 disables. The current batch's dir is never folded, so its
-    * own redelivery stays an overwrite. */
+  /** The cadence hook [[MonoidStore.runStream]] applies after batch
+    * `batchId`'s delta is written: when [[MonoidStore.compactDue]],
+    * fold everything up to the PREVIOUS batch (committed by the
+    * checkpoint). The current batch's dir is never folded, so its own
+    * redelivery stays an overwrite. */
   def maybeCompact(spark: SparkSession, batchId: Long, every: Int): Unit =
-    if (compactable && every > 0 && batchId > 0 && batchId % every == 0)
+    if (compactable && MonoidStore.compactDue(batchId, every))
       compact(spark, batchId - 1)
 }
 
@@ -133,6 +135,45 @@ final class BucketedMonoidStore(val path: String,
 }
 
 object MonoidStore {
+
+  /** THE compaction cadence: true once per `every` batches, never on
+    * batch 0; `every` ≤ 0 disables. Shared by [[MonoidStore.maybeCompact]]
+    * and stores whose fold is their own ([[MarkovStore.foldSegments]]). */
+  def compactDue(batchId: Long, every: Int): Boolean =
+    every > 0 && batchId > 0 && batchId % every == 0
+
+  /** THE stream wiring for every file-fed store: a schema'd parquet
+    * source over `uploadDir`, one file per trigger (one upload, one
+    * micro-batch), `AvailableNow`, checkpointed `foreachBatch`.
+    * `transform` shapes the streaming frame (identity for raw-row
+    * streams). The contract for `stores`:
+    *  - `recover` runs once on each before the stream starts, so a
+    *    crashed compaction converges before any batch writes;
+    *  - each batch runs `append(batch, id)`, then [[maybeCompact]] with
+    *    `compactEvery` on each — the batch in flight is never folded,
+    *    so its redelivery after a crash stays an overwrite of its own
+    *    dir instead of a double count.
+    * Streams whose state is not a [[MonoidStore]] pass `stores = Nil`. */
+  def runStream(spark: SparkSession, uploadDir: String,
+                checkpointDir: String, schema: StructType,
+                stores: Seq[MonoidStore] = Nil, compactEvery: Int = 0,
+                transform: DataFrame => DataFrame = identity)(
+                append: (DataFrame, Long) => Unit): StreamingQuery = {
+    stores.foreach(_.recover(spark))
+    val body: (DataFrame, Long) => Unit = { (batch, id) =>
+      append(batch, id)
+      stores.foreach(_.maybeCompact(spark, id, compactEvery))
+    }
+    transform(spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(uploadDir))
+      .writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch(body)
+      .start()
+  }
 
   /** The common aggregate monoid: group by every non-aggregated
     * column, SUM `sumCols`, lattice-MIN `minCols`, lattice-MAX

@@ -51,13 +51,9 @@ object PcaStore {
   def runPcaStream(spark: SparkSession, uploadDir: String,
                    storePath: String, checkpointDir: String,
                    schema: StructType,
-                   compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendPcaBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                   compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendPcaBatch(spark, batch, storePath, id)
     }
-  }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Incrementally-maintained DATA-PROFILE store — the streaming half of
@@ -109,21 +108,6 @@ object ProfileStore {
                          storePath: String, batchId: Long): Unit = {
     statsStore(storePath).append(statsDelta(batch), batchId)
     sketchStore(storePath).append(sketchDelta(batch), batchId)
-  }
-
-  /** Wire the stream; `compactEvery` > 0 folds both sub-stores on the
-    * same cadence (see [[SkewStore.runSkewStream]]). */
-  def runProfileStream(spark: SparkSession, uploadDir: String,
-                       storePath: String, checkpointDir: String,
-                       schema: StructType,
-                       compactEvery: Int = 0): StreamingQuery = {
-    val stores = Seq(statsStore(storePath), sketchStore(storePath))
-    stores.foreach(_.recover(spark))
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendProfileBatch(spark, batch, storePath, id)
-        stores.foreach(_.maybeCompact(spark, id, compactEvery))
-    }
   }
 
   /** The live profile over everything absorbed: (col_name, n_rows,

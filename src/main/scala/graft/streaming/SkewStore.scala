@@ -81,13 +81,9 @@ object SkewStore {
   def runSkewStream(spark: SparkSession, uploadDir: String, keyCol: String,
                     storePath: String, checkpointDir: String,
                     schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendKeyCountBatch(spark, batch, keyCol, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                    compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendKeyCountBatch(spark, batch, keyCol, storePath, id)
     }
-  }
 }

@@ -60,13 +60,9 @@ object SqGridStore {
   def runGridStream(spark: SparkSession, uploadDir: String,
                     storePath: String, checkpointDir: String,
                     schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendGridBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                    compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendGridBatch(spark, batch, storePath, id)
     }
-  }
 }

@@ -76,15 +76,10 @@ object TextStatsStore {
   def runTextStatsStream(spark: SparkSession, uploadDir: String,
                          storePath: String, checkpointDir: String,
                          schema: StructType,
-                         compactEvery: Int = 0): StreamingQuery = {
-    val stores = Seq(wcStore(storePath), rdStore(storePath),
-      bgStore(storePath))
-    stores.foreach(_.recover(spark))
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendTextBatch(spark, batch, storePath, id)
-        if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-          stores.foreach(_.compact(spark, id))
+                         compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(wcStore(storePath), rdStore(storePath), bgStore(storePath)),
+      compactEvery) { (batch, id) =>
+      appendTextBatch(spark, batch, storePath, id)
     }
-  }
 }

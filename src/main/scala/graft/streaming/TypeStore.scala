@@ -80,13 +80,9 @@ object TypeStore {
   def runTypeStream(spark: SparkSession, uploadDir: String,
                     storePath: String, checkpointDir: String,
                     schema: StructType,
-                    compactEvery: Int = 0): StreamingQuery = {
-    val st = store(storePath)
-    st.recover(spark)
-    CurationStream.runFileStream(spark, uploadDir, checkpointDir, schema) {
-      (batch, id) =>
-        appendTypesBatch(spark, batch, storePath, id)
-        st.maybeCompact(spark, id, compactEvery)
+                    compactEvery: Int = 0): StreamingQuery =
+    MonoidStore.runStream(spark, uploadDir, checkpointDir, schema,
+      Seq(store(storePath)), compactEvery) { (batch, id) =>
+      appendTypesBatch(spark, batch, storePath, id)
     }
-  }
 }

@@ -1,14 +1,22 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.streaming.{MonoidStore, ProfileStore, SkewStore, StoreCompaction}
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+import graft.ext.{ChaoRichness, Conformal, IsotonicCal, RaterAgreement,
+  Readability, TextRank}
+import graft.streaming.{CalibrationStore, ConformalStore, MonoidStore,
+  ProfileStore, SkewStore, StoreCompaction, TextStatsStore}
 
 /** The unified per-batch-delta store contract, proven once over the
   * shared implementation: in-stream cadenced compaction changes no
   * view, bounds the dir count, survives a stream restart (checkpoint
-  * resume), and the non-sum folds (min/max lattice, bottom-k sketch)
-  * compact with their own monoid rather than a corrupting column sum. */
+  * resume), never folds the batch in flight (so a redelivered batch
+  * overwrites instead of double-counting), and the non-sum folds
+  * (min/max lattice, bottom-k sketch) compact with their own monoid
+  * rather than a corrupting column sum. */
 class MonoidStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -108,5 +116,105 @@ class MonoidStoreSpec extends SparkSpec {
     store.recover(spark)
     assert(batchDirs(s"$tmp/store").toSet === Set("batch=-1", "batch=2"))
     assert(store.merged(spark).collect().map(_.toSeq).toSet === want)
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** Synthetic documents (doc_id, source, text): two sources, lengths
+    * straddling the rater gate's 100-char bound, some multi-sentence. */
+  private def docsUpload(b: Int): DataFrame = {
+    val vocab = Seq("river", "stone", "the", "light", "of", "cloud",
+      "bright", "a", "market", "signal", "green", "and", "harbor")
+    (0 until 40).map { i =>
+      val id = b * 1000L + i
+      val words = (0 until 6 + (i * 7 + b) % 25).map(j =>
+        vocab(((id * 7 + j * j * 3) % vocab.size).toInt))
+      (id, if (i % 2 == 0) "web" else "books",
+        words.mkString(" ") + (if (i % 3 == 0) ". Then more." else "."))
+    }.toDF("doc_id", "source", "text")
+  }
+
+  /** The frozen scorer the calibration wrapper is fed: docs ⇒ (s, y). */
+  private def frozenScore(docs: DataFrame): DataFrame =
+    docs.select((length(col("text")) % 11).cast("long").as("s"),
+      (col("doc_id") % 3 === 0).cast("int").as("y"))
+
+  /** One wrapper under the redelivery contract: its three uploads, its
+    * stream run (uploadGlob, storePath, ckpt, schema) at cadence 2, the
+    * served readout, and the batch twin over the union of uploads. */
+  private case class RedeliveryRow(
+      name: String,
+      uploads: () => Seq[DataFrame],
+      run: (String, String, String, StructType) => StreamingQuery,
+      served: String => Seq[String],
+      twin: DataFrame => Seq[String])
+
+  private val redeliveryRows = Seq(
+    RedeliveryRow("SkewStore.runSkewStream",
+      () => (0 until 3).map(b =>
+        (1L to 300L).map(i => ((i * (b + 1)) % 23, i)).toDF("fk", "v")),
+      (up, st, ck, sc) => SkewStore.runSkewStream(
+        spark, up, "fk", st, ck, sc, compactEvery = 2),
+      st => sortedRows(SkewStore.keyCounts(spark, st)),
+      all => sortedRows(
+        all.groupBy(col("fk").as("k")).agg(count(lit(1)).as("c")))),
+    RedeliveryRow("TextStatsStore.runTextStatsStream",
+      () => (0 until 3).map(docsUpload),
+      (up, st, ck, sc) => TextStatsStore.runTextStatsStream(
+        spark, up, st, ck, sc, compactEvery = 2),
+      st => sortedRows(TextStatsStore.chaoView(spark, st)) ++
+        sortedRows(TextStatsStore.readabilityView(spark, st)) ++
+        sortedRows(TextStatsStore.textrankView(spark, st)),
+      all => sortedRows(ChaoRichness.chaoRichness(all)) ++
+        sortedRows(Readability.readability(all)) ++
+        sortedRows(TextRank.textrank(all))),
+    RedeliveryRow("ConformalStore.runConformalStream",
+      () => (0 until 3).map(b => (0L until 200L).map(i =>
+        (b * 1000L + i, (i * 13 + b) % 17, if (i % 3 == 0) 1 else 0))
+        .toDF("doc_id", "score", "y")),
+      (up, st, ck, sc) => ConformalStore.runConformalStream(
+        spark, up, st, ck, sc, compactEvery = 2),
+      st => sortedRows(ConformalStore.conformalView(spark, st)),
+      all => sortedRows(Conformal.conformal(all))),
+    RedeliveryRow("CalibrationStore.runCalibrationStream",
+      () => (0 until 3).map(docsUpload),
+      (up, st, ck, sc) => CalibrationStore.runCalibrationStream(
+        spark, up, st, ck, sc, frozenScore, compactEvery = 2),
+      st => sortedRows(CalibrationStore.isotonicView(spark, st)) ++
+        sortedRows(CalibrationStore.kappaView(spark, st)),
+      all => sortedRows(IsotonicCal.isotonicFromBuckets(
+          IsotonicCal.bucketTable(frozenScore(all)))) ++
+        sortedRows(RaterAgreement.kappaFromVerdicts(
+          RaterAgreement.raterVerdicts(all)))))
+
+  // three uploads at cadence 2: batch 2 folds batches 0-1 into the
+  // base. Losing batch 2's commit makes the restart re-run it for
+  // real, and the served view must still equal its batch twin — a
+  // fold that took the in-flight batch counts it twice.
+  redeliveryRows.foreach { r =>
+    test(s"redelivered cadence batch: served == batch twin (${r.name})") {
+      val tmp = java.nio.file.Files.createTempDirectory("redeliver")
+        .toFile.getAbsolutePath
+      val ups = r.uploads()
+      ups.zipWithIndex.foreach { case (df, i) =>
+        df.coalesce(1).write.parquet(s"$tmp/src/up$i")
+      }
+      def runToEnd(): Unit = r.run(s"$tmp/src/*", s"$tmp/store",
+        s"$tmp/ckpt", ups.head.schema).awaitTermination()
+      runToEnd()
+      val fs = new Path(tmp)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val files = fs.listFiles(new Path(s"$tmp/store"), true)
+      var folded = false
+      while (files.hasNext)
+        if (files.next().getPath.toString.contains("/batch=-1/")) folded = true
+      assert(folded, "batch 2 should have fired the cadence fold")
+      val commits = new Path(s"$tmp/ckpt/commits")
+      Seq("2", ".2.crc").foreach(n => fs.delete(new Path(commits, n), false))
+      runToEnd()
+      assert(fs.exists(new Path(commits, "2")), "batch 2 was not re-run")
+      assert(r.served(s"$tmp/store") === r.twin(ups.reduce(_ unionAll _)))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.streaming.ProfileStore
+import graft.streaming.{MonoidStore, ProfileStore}
 
 /** Profile store: the streamed per-batch-delta store serves exactly
   * the batch profile of the absorbed corpus — including the KMV
@@ -25,8 +25,8 @@ class ProfileStoreSpec extends SparkSpec {
     slices.zipWithIndex.foreach { case (s, i) =>
       s.coalesce(1).write.parquet(s"$tmp/upload/part$i")
     }
-    graft.streaming.CurationStream
-      .runFileStream(spark, s"$tmp/upload/*", s"$tmp/ckpt", orders.schema) {
+    MonoidStore.runStream(spark, s"$tmp/upload/*", s"$tmp/ckpt",
+        orders.schema) {
         (b, id) => ProfileStore.appendProfileBatch(spark, b, s"$tmp/store", id)
       }.awaitTermination()
     val got = ProfileStore.profileView(spark, s"$tmp/store")
